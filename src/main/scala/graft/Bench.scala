@@ -199,9 +199,7 @@ object Bench {
           else if (round == 0) "unadjudicated"
           else if (normRatio <= 1.15) "drift"
           else "plan_suspect"
-        f"""{"query":"$n","prev":$p%.3f,"cur":$c%.3f,"ratio":$r%.2f,""" +
-          f""""ab_min":$bestQ%.3f,"ab_norm_ratio":$normRatio%.2f,""" +
-          s""""verdict":"$verdict"}"""
+        regressionJson(n, p, c, r, bestQ, normRatio, verdict)
       }
       .mkString("[", ",", "]")
     val singleSample = results.count { case (n, (_, ok)) => ok && !rerun.contains(n) }
@@ -221,12 +219,31 @@ object Bench {
     // "[success]" trailer is suppressed in build.sbt for the same reason):
     // same minima as ever in `queries` (ms precision — the raw doubles are
     // in the file), nothing added, nothing removed.
-    def ms(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
-    val qsLine = results.toSeq.sortBy(_._1)
+    println(resultLine(total, results, failed, singleSample, sfDir))
+    spark.stop()
+  }
+
+  /** `v` with `digits` decimals and a `.` separator under every default
+    * locale (the `f` interpolator writes `,` under e.g. de-DE, which
+    * is not a JSON number). Same bytes as `f"%.3f"` under en. */
+  def fixed(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** One flagged query's A/B triage record (`regressions` in the file). */
+  def regressionJson(n: String, p: Double, c: Double, r: Double,
+      bestQ: Double, normRatio: Double, verdict: String): String =
+    s"""{"query":"$n","prev":${fixed(p, 3)},"cur":${fixed(c, 3)},"ratio":${fixed(r, 2)},""" +
+      s""""ab_min":${fixed(bestQ, 3)},"ab_norm_ratio":${fixed(normRatio, 2)},""" +
+      s""""verdict":"$verdict"}"""
+
+  /** The stdout contract line: per-query minima in ms precision, -1 for a
+    * failed query. */
+  def resultLine(total: Double, results: Seq[(String, (Double, Boolean))],
+      failed: String, singleSample: Int, sfDir: String): String = {
+    def ms(v: Double): String = if (v < 0) "-1" else fixed(v, 3)
+    val qsLine = results.sortBy(_._1)
       .map { case (k, (v, ok)) => "\"" + k + "\":" + (if (ok) ms(v) else "-1") }
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qsLine,"failed":$failed,"single_sample":$singleSample,"sf":"$sfDir"}"""
-    println(line)
-    spark.stop()
+    s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qsLine,"failed":$failed,"single_sample":$singleSample,"sf":"$sfDir"}"""
   }
 }

@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
+import java.util.concurrent.{CompletableFuture, CompletionException}
 
 /** Qdrant REST transport for [[VectorIndexSink.VectorIndexClient]] — the
   * wire format of the "batch vector indexing to Qdrant" north star,
@@ -20,7 +21,8 @@ import java.time.Duration
   *  - `GET /collections/{c}` → `result.payload_schema` keys = the
   *    existing payload indexes (what the idempotent diff consults)
   *  - `PUT /collections/{c}/index` body
-  *    `{"field_name":f,"field_schema":kind}`
+  *    `{"field_name":f,"field_schema":kind}` — a bootstrap's index PUTs
+  *    are sent concurrently ([[createIndexes]])
   *  - `PUT /collections/{c}/points?wait=true` body
   *    `{"points":[{"id":…,"vector":[…],"payload":{…}}]}`
   *
@@ -54,20 +56,27 @@ final class QdrantHttpClient(baseUrl: String,
   private val http = HttpClient.newBuilder().connectTimeout(timeout).build()
   private val mapper = new ObjectMapper()
 
-  private def request(method: String, path: String, body: String): String = {
+  private def build(method: String, path: String, body: String): HttpRequest = {
     val b = HttpRequest.newBuilder(URI.create(baseUrl + path)).timeout(timeout)
-    val req = (method match {
+    (method match {
       case "GET" => b.GET()
       case "PUT" => b.header("Content-Type", "application/json")
         .PUT(HttpRequest.BodyPublishers.ofString(body))
       case other => throw new IllegalArgumentException(other)
     }).build()
-    val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
+  }
+
+  private def checked(method: String, path: String,
+      resp: HttpResponse[String]): String = {
     if (resp.statusCode() / 100 != 2)
       throw new RuntimeException(
         s"$method $path -> HTTP ${resp.statusCode()}: ${resp.body()}")
     resp.body()
   }
+
+  private def request(method: String, path: String, body: String): String =
+    checked(method, path,
+      http.send(build(method, path, body), HttpResponse.BodyHandlers.ofString()))
 
   override def listCollections(): Seq[String] = {
     val root = mapper.readTree(request("GET", "/collections", null))
@@ -93,13 +102,28 @@ final class QdrantHttpClient(baseUrl: String,
     out.result()
   }
 
-  override def createIndex(collection: String, field: String,
-      kind: String): Unit = {
-    val body = mapper.createObjectNode()
-    body.put("field_name", field)
-    body.put("field_schema", kind)
-    request("PUT", s"/collections/$collection/index",
-      mapper.writeValueAsString(body))
+  /** Every index PUT in flight at once, so the wave costs one round trip;
+    * waits for all answers, then throws on the first failure in `fields`
+    * order. */
+  override def createIndexes(collection: String,
+      fields: Seq[(String, String)]): Unit = {
+    val path = s"/collections/$collection/index"
+    val inFlight = fields.map { case (field, kind) =>
+      val body = mapper.createObjectNode()
+      body.put("field_name", field)
+      body.put("field_schema", kind)
+      http.sendAsync(build("PUT", path, mapper.writeValueAsString(body)),
+        HttpResponse.BodyHandlers.ofString())
+    }
+    // allOf completes only once every request has completed, failed or not
+    try CompletableFuture.allOf(inFlight: _*).join()
+    catch { case _: CompletionException => () }
+    inFlight.foreach { f =>
+      val resp = try f.join() catch {
+        case e: CompletionException if e.getCause != null => throw e.getCause
+      }
+      checked("PUT", path, resp)
+    }
   }
 
   override def upsertBatch(collection: String, points: Seq[Point]): Unit = {

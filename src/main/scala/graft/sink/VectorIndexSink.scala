@@ -35,7 +35,13 @@ object VectorIndexSink {
     def listCollections(): Seq[String]
     def createCollection(name: String, vectorSize: Int, distance: String): Unit
     def listIndexes(collection: String): Seq[String]
-    def createIndex(collection: String, field: String, kind: String): Unit
+    /** Create every `(field, kind)` payload index of `fields` on
+      * `collection` as one wave. A remote client sends them all at once,
+      * so the wave costs one round trip, not `fields.size`, and throws on
+      * a failure only after every request has been answered (none is
+      * abandoned in flight). The indexes created stay, and the next
+      * [[ensureCollection]] creates the rest. */
+    def createIndexes(collection: String, fields: Seq[(String, String)]): Unit
     def upsertBatch(collection: String, points: Seq[Point]): Unit
   }
 
@@ -65,15 +71,29 @@ object VectorIndexSink {
 
   /** Idempotent collection bootstrap (S3 + S4): create collection if
     * absent, then create only the indexes that do not exist yet. Driver-
-    * side, once per job. */
+    * side, once per job, in three sequential round trips:
+    *
+    *  - fresh collection: list collections, create the collection, then
+    *    every payload index in one [[VectorIndexClient.createIndexes]]
+    *    wave — a collection just created has no indexes to diff;
+    *  - existing collection: list collections, list its indexes, then the
+    *    missing ones in one wave (no wave when none is missing).
+    *
+    * The wave saves round trips only where indexes are missing, i.e. in
+    * practice on the first bootstrap of a collection (3 sequential round
+    * trips instead of 2 + one per index); a call on a complete existing
+    * collection costs the same list + GET either way.
+    *
+    * Nothing is cached between calls: every call reads the server's state.
+    * Any failed request throws; a partly built collection is completed by
+    * the next call, which creates only what is still missing. */
   def ensureCollection(client: VectorIndexClient, name: String,
       vectorSize: Int, distance: String = "Cosine"): Unit = {
-    if (!client.listCollections().contains(name))
-      client.createCollection(name, vectorSize, distance)
-    val existing = client.listIndexes(name).toSet
-    PayloadIndexes.foreach { case (field, kind) =>
-      if (!existing.contains(field)) client.createIndex(name, field, kind)
-    }
+    val existing =
+      if (client.listCollections().contains(name)) client.listIndexes(name).toSet
+      else { client.createCollection(name, vectorSize, distance); Set.empty[String] }
+    val missing = PayloadIndexes.filterNot { case (field, _) => existing(field) }
+    if (missing.nonEmpty) client.createIndexes(name, missing)
   }
 
   /** Batch-index a memories DataFrame: ship (memory_id, embedding, payload)
@@ -88,7 +108,9 @@ object VectorIndexSink {
     val payloadCols = memories.columns.filterNot(Set("memory_id", "embedding")).toSeq
     val prepared = memories.select(
       col("memory_id").cast("string").as("memory_id"),
-      col("embedding"),
+      // Point.vector is Seq[Float] but Ingest.toMemories emits
+      // array<double>; on float input the cast is a no-op
+      col("embedding").cast("array<float>").as("embedding"),
       map_from_arrays(
         typedLit(payloadCols),
         array(payloadCols.map(c => col(c).cast("string")): _*)).as("payload"))
@@ -149,10 +171,11 @@ object InMemoryVectorIndex {
       import scala.jdk.CollectionConverters._
       Option(indexes.get(collection)).map(_.asScala.toSeq).getOrElse(Nil)
     }
-    def createIndex(collection: String, field: String, kind: String): Unit = {
-      createIndexCalls.incrementAndGet()
-      indexes.get(collection).add(field)
-    }
+    def createIndexes(collection: String, fields: Seq[(String, String)]): Unit =
+      fields.foreach { case (field, _) =>
+        createIndexCalls.incrementAndGet()
+        indexes.get(collection).add(field)
+      }
     def upsertBatch(collection: String, batch: Seq[Point]): Unit = {
       batchSizes.add(batch.size)
       batch.foreach(p => points.put((collection, p.id), p))

@@ -3,7 +3,9 @@ package graft.sink
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.SparkSpec
+import graft.catalog.ArchetypeCatalog
 import graft.functions.Embedder
+import graft.ingest.Ingest
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.functions._
@@ -25,9 +27,11 @@ class QdrantWireSpec extends SparkSpec {
 
   /** Minimal Qdrant-shaped fake: canned collection/index state consulted
     * by the GETs, every request recorded. Thread-safe — upserts arrive
-    * from executor threads under local master. */
+    * from executor threads under local master. An index PUT for
+    * `failIndex` answers HTTP 500 and creates nothing. */
   private final class FakeQdrant(
       preCollections: Map[String, Seq[String]] = Map.empty) {
+    @volatile var failIndex: Option[String] = None
     val requests = new java.util.concurrent.ConcurrentLinkedQueue[Req]()
     private val collections =
       new java.util.concurrent.ConcurrentHashMap[String, java.util.Set[String]]()
@@ -41,10 +45,10 @@ class QdrantWireSpec extends SparkSpec {
       val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       val path = ex.getRequestURI.getPath
       requests.add(Req(ex.getRequestMethod, path, ex.getRequestURI.getQuery, body))
-      val resp = route(ex.getRequestMethod, path, body)
+      val (code, resp) = route(ex.getRequestMethod, path, body)
       val bytes = resp.getBytes(StandardCharsets.UTF_8)
       ex.getResponseHeaders.add("Content-Type", "application/json")
-      ex.sendResponseHeaders(200, bytes.length)
+      ex.sendResponseHeaders(code, bytes.length)
       ex.getResponseBody.write(bytes)
       ex.close()
     })
@@ -52,9 +56,18 @@ class QdrantWireSpec extends SparkSpec {
     val baseUrl = s"http://127.0.0.1:${server.getAddress.getPort}"
     def stop(): Unit = server.stop(0)
 
-    private def route(method: String, path: String, body: String): String = {
+    private def route(method: String, path: String, body: String): (Int, String) = {
       val parts = path.split("/").filter(_.nonEmpty)
       (method, parts.toSeq) match {
+        case ("PUT", Seq("collections", _, "index"))
+            if failIndex.contains(mapper.readTree(body).path("field_name").asText()) =>
+          500 -> """{"status":{"error":"index build failed"},"time":0.0}"""
+        case req => 200 -> ok(req, body)
+      }
+    }
+
+    private def ok(req: (String, Seq[String]), body: String): String =
+      req match {
         case ("GET", Seq("collections")) =>
           val names = {
             import scala.jdk.CollectionConverters._
@@ -84,8 +97,10 @@ class QdrantWireSpec extends SparkSpec {
         case other =>
           throw new IllegalStateException(s"unrouted $other")
       }
-    }
   }
+
+  private def indexBodies(fields: Seq[(String, String)]): Seq[String] =
+    fields.map { case (f, k) => s"""{"field_name":"$f","field_schema":"$k"}""" }
 
   test("bootstrap serializes the exact Qdrant collection + index payloads") {
     val fake = new FakeQdrant()
@@ -93,18 +108,39 @@ class QdrantWireSpec extends SparkSpec {
       ensureCollection(new QdrantHttpClient(fake.baseUrl), "memories", 384)
       import scala.jdk.CollectionConverters._
       val reqs = fake.requests.asScala.toSeq
-      // discovery → create → index-diff GET → one index PUT per field
+      // discovery → create → every index PUT in one concurrent wave; a
+      // collection just created has no indexes, so there is no diff GET
       assert(reqs.head == Req("GET", "/collections", null, ""))
       assert(reqs(1) == Req("PUT", "/collections/memories", null,
         """{"vectors":{"size":384,"distance":"Cosine"}}"""))
-      assert(reqs(2) == Req("GET", "/collections/memories", null, ""))
-      val indexPuts = reqs.drop(3)
-      assert(indexPuts.map(_.path).distinct == Seq("/collections/memories/index"))
-      // the reference's 12 payload indexes, exact field_schema each,
-      // declaration order preserved (storage.py:73-86)
-      assert(indexPuts.map(_.body) == PayloadIndexes.map { case (f, k) =>
-        s"""{"field_name":"$f","field_schema":"$k"}"""
-      })
+      assert(!reqs.exists(r => r.method == "GET" && r.path == "/collections/memories"))
+      val indexPuts = reqs.drop(2)
+      assert(indexPuts.map(r => (r.method, r.path)).distinct ==
+        Seq(("PUT", "/collections/memories/index")))
+      // the reference's 12 payload indexes, exact field_schema each
+      // (storage.py:73-86); the PUTs are in flight together, so their
+      // arrival order is not a wire property — compare as multisets
+      assert(indexPuts.map(_.body).sorted == indexBodies(PayloadIndexes).sorted)
+    } finally fake.stop()
+  }
+
+  test("a failed index PUT fails the bootstrap after the whole wave; a rerun heals it") {
+    val fake = new FakeQdrant()
+    fake.failIndex = Some("session_id")
+    try {
+      val client = new QdrantHttpClient(fake.baseUrl)
+      val e = intercept[RuntimeException](ensureCollection(client, "memories", 384))
+      assert(e.getMessage.contains("PUT /collections/memories/index -> HTTP 500"))
+      import scala.jdk.CollectionConverters._
+      def indexPuts = fake.requests.asScala.toSeq
+        .filter(_.path == "/collections/memories/index")
+      // every PUT of the wave reached the server: none abandoned in flight
+      assert(indexPuts.map(_.body).sorted == indexBodies(PayloadIndexes).sorted)
+      fake.failIndex = None
+      fake.requests.clear()
+      ensureCollection(client, "memories", 384)
+      assert(indexPuts.map(_.body) ==
+        indexBodies(PayloadIndexes.filter(_._1 == "session_id")))
     } finally fake.stop()
   }
 
@@ -118,7 +154,9 @@ class QdrantWireSpec extends SparkSpec {
       assert(!reqs.exists(r => r.method == "PUT" && r.path == "/collections/memories"))
       val created = reqs.filter(_.path == "/collections/memories/index")
         .map(r => mapper.readTree(r.body).path("field_name").asText())
-      assert(created == PayloadIndexes.map(_._1).filterNot(pre("memories").contains))
+      // one concurrent wave: the set created is the wire property, not its order
+      assert(created.sorted ==
+        PayloadIndexes.map(_._1).filterNot(pre("memories").contains).sorted)
     } finally fake.stop()
   }
 
@@ -164,6 +202,46 @@ class QdrantWireSpec extends SparkSpec {
         .select(col("embedding")).head().getSeq[Float](0)
       val got = (0 until 4).map(i => m2.path("vector").get(i).floatValue())
       assert(got == expected)
+    } finally fake.stop()
+  }
+
+  test("indexes Ingest.toMemories output directly: double embeddings ship as floats") {
+    import spark.implicits._
+    val arch = ArchetypeCatalog.fromYaml(
+      """version: "1"
+        |title: t
+        |tools:
+        |  Act:
+        |""".stripMargin)
+    val calls = Seq(
+      ("1", "s1", "2024-01-01 00:00:01", "c1"),
+      ("2", "s1", "2024-01-01 00:00:02", "c2"),
+      ("3", "s2", "2024-01-01 00:00:03", "c3"))
+      .toDF("memory_id", "session_id", "ts", "content")
+      .select(col("memory_id"), col("session_id"), lit("Act").as("tool"),
+        to_timestamp(col("ts")).as("timestamp"),
+        map(lit("Title"), col("content"), lit("Content"), col("content"),
+          lit("Context"), lit("x")).as("args"))
+    val mem = Ingest.toMemories(calls, arch, dims = 4)
+    assert(mem.schema("embedding").dataType.simpleString == "array<double>")
+    val fake = new FakeQdrant(Map("memories" -> Nil))
+    try {
+      val base = fake.baseUrl // capture the string, not the spec class
+      indexBatch(mem, "memories", () => new QdrantHttpClient(base))
+      import scala.jdk.CollectionConverters._
+      val points = fake.requests.asScala.toSeq
+        .filter(_.path == "/collections/memories/points")
+        .flatMap { r =>
+          val pts = mapper.readTree(r.body).path("points")
+          (0 until pts.size()).map(pts.get)
+        }
+      val got = points.map { p =>
+        p.path("id").asLong().toString ->
+          (0 until p.path("vector").size()).map(p.path("vector").get(_).floatValue())
+      }.toMap
+      val expected = mem.select("memory_id", "embedding").collect()
+        .map(r => r.getString(0) -> r.getSeq[Double](1).map(_.toFloat)).toMap
+      assert(got == expected && got.keySet == Set("1", "2", "3"))
     } finally fake.stop()
   }
 
