@@ -7,6 +7,7 @@ import graft.operators.{Components, Dedup, Similarity, TextAnalysis, TopK}
 import graft.search.{Filters, Search, SearchRequest}
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftBridge.exactCheckpoint
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -735,36 +736,28 @@ object SparkEntry {
     val deg = pairs.select(col("a").as("vec_id"))
       .unionAll(pairs.select(col("b").as("vec_id")))
       .groupBy(col("vec_id")).agg(count(lit(1)).as("deg"))
-    val core = deg.where(col("deg") >= 3).select(col("vec_id"))
-      .localCheckpoint()
-    // core / comp / assigned are NODE-bounded while `pairs` is the
-    // candidate-scale relation; the checkpointed node tables carry no
-    // size statistics, so every attach was a sort-merge join re-shuffling
-    // the pair relation (the r13 graph-iterator finding, Graph.attachFor).
-    // Broadcast the node-bounded side when provably small — core is
-    // already materialized, so the guard count is a local read; the same
-    // conf governs both families (0 disables, which is the A/B toggle).
-    val bcastMax = e.sparkSession.conf
-      .get("graft.graph.broadcastStateMax", "4000000").toLong
-    val att: DataFrame => DataFrame =
-      if (bcastMax > 0 && core.count() <= bcastMax) broadcast else identity
+    // core / comp are NODE-bounded while `pairs` is the candidate-scale
+    // relation; exact-size checkpoints let Spark's size rule broadcast
+    // them while they fit instead of sort-merge joining (and re-shuffling)
+    // the pair relation at every attach (the graph-iterator finding)
+    val core = exactCheckpoint(deg.where(col("deg") >= 3).select(col("vec_id")))
     val corePairs = pairs
-      .join(att(core.select(col("vec_id").as("a"))), "a")
-      .join(att(core.select(col("vec_id").as("b"))), "b")
+      .join(core.select(col("vec_id").as("a")), "a")
+      .join(core.select(col("vec_id").as("b")), "b")
       .select(col("a"), col("b"))
-    val comp = operators.Components.connectedComponents(
-      core.select(col("vec_id").as("id")), corePairs).localCheckpoint()
+    val comp = exactCheckpoint(operators.Components.connectedComponents(
+      core.select(col("vec_id").as("id")), corePairs))
     val border = pairs.select(col("a").as("v"), col("b").as("u"))
       .unionAll(pairs.select(col("b").as("v"), col("a").as("u")))
-      .join(att(comp.select(col("id").as("u"), col("component"))), "u")
-      .join(att(core.select(col("vec_id").as("v"))), Seq("v"), "left_anti")
+      .join(comp.select(col("id").as("u"), col("component")), "u")
+      .join(core.select(col("vec_id").as("v")), Seq("v"), "left_anti")
       .groupBy(col("v").as("vec_id"))
       .agg(min(col("component")).as("cluster"))
     val assigned = comp.select(col("id").as("vec_id"),
         lit("core").as("role"), col("component").as("cluster"))
       .unionAll(border.select(col("vec_id"), lit("border").as("role"),
         col("cluster")))
-    e.select(col("vec_id")).join(att(assigned), Seq("vec_id"), "left")
+    e.select(col("vec_id")).join(assigned, Seq("vec_id"), "left")
       .select(col("vec_id"), coalesce(col("role"), lit("noise")).as("role"),
         col("cluster"))
       .orderBy(col("vec_id"))

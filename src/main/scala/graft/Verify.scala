@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,25 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query names (fast local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // gate-scale streaming partition pins — same values as Bench so the
-      // correctness dump exercises the benched plans (see Bench.scala)
-      .config("graft.stream.parts",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
-      .config("graft.stream.parts.fp",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS_FP", "8"))
-      .config("graft.stream.parts.ivj",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS_IVJ", "2"))
-      // same RocksDB changelog-checkpointing mode as Bench (see there)
-      .config(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GateSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Gates that throw are recorded in errors.json (name -> error text), not

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftBridge.exactCheckpoint
 import org.apache.spark.sql.functions._
 
 /** Connected components over candidate-pair edges — the cluster-resolution
@@ -36,20 +37,11 @@ object Components {
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       maxIter: Int = 20, driverMaxEdges: Long = 1L << 22): DataFrame = {
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
+    // the exact-size checkpoint's row count is the size gate (no job)
+    val edges = exactCheckpoint(pairs.select(col("a").as("src"), col("b").as("dst"))
       .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    // size gate via limit+count so a huge edge list bails out after
-    // driverMaxEdges+1 rows instead of a full count. The small path still
-    // runs two jobs over the checkpointed edges (gate, then the union-find
-    // iterator) — both bounded and local-read-only after the checkpoint.
-    // clamp before the Int cast: driverMaxEdges near Long range must not
-    // overflow limit()'s Int argument (a >2^31 driver bound is nonsense,
-    // but it must degrade to "always small path", not wrap negative)
-    val gate = edges
-      .limit(math.min(driverMaxEdges + 1, Int.MaxValue.toLong).toInt).count()
-    if (gate <= driverMaxEdges)
+      .distinct())
+    if (edges.queryExecution.analyzed.stats.rowCount.get <= driverMaxEdges)
       return attachIsolated(nodes, unionFindLabels(edges))
     iterativeLabels(nodes, edges, maxIter)
   }

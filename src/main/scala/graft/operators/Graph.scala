@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftBridge.exactCheckpoint
 import org.apache.spark.sql.functions._
 
 /** Graph-shape analytics over an edge list — the structural metrics a
@@ -210,19 +211,17 @@ object Graph {
     // Materializing every round bounds the lineage — the per-iteration
     // checkpoint every iterative graph engine applies (at cluster scale,
     // reliable checkpoint/persist instead of localCheckpoint).
-    var e = edges.select(col("a"), col("b")).localCheckpoint()
-    // peeling only shrinks e, so the initial-e guard stays valid for
-    // every round's node-bounded keep set (see attachFor)
-    val att = attachFor(e)
+    // exact-size checkpoints: keep's estimate derives from e's measured
+    // bytes, so Spark's own size rule broadcasts it while it fits
+    var e = exactCheckpoint(edges.select(col("a"), col("b")))
     def degrees(g: DataFrame): DataFrame =
       g.select(col("a").as("node")).unionAll(g.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     (0 until rounds).foreach { _ =>
       val keep = degrees(e).where(col("deg") >= k).select(col("node"))
-      e = e
-        .join(att(keep.select(col("node").as("a"))), Seq("a"), "left_semi")
-        .join(att(keep.select(col("node").as("b"))), Seq("b"), "left_semi")
-        .localCheckpoint()
+      e = exactCheckpoint(e
+        .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(col("node").as("b")), Seq("b"), "left_semi"))
     }
     degrees(e).orderBy(col("node"))
   }
@@ -390,12 +389,11 @@ object Graph {
     require(rounds >= 1 && rounds <= 8 && dampBounds(dampNum, dampDen))
     val (e, deg) = undirect(edges)
     val teleport = (dampDen - dampNum) * scale / dampDen
-    val flagged = deg
+    val flagged = exactCheckpoint(deg
       .join(broadcast(seeds.select(col("node"), lit(true).as("is_seed"))),
         Seq("node"), "left")
       .select(col("node"), col("deg"),
-        coalesce(col("is_seed"), lit(false)).as("is_seed"))
-      .localCheckpoint()
+        coalesce(col("is_seed"), lit(false)).as("is_seed")))
     val init = flagged.select(col("node"),
       when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("r"))
     iterate(e, flagged, init,
@@ -404,32 +402,21 @@ object Graph {
       .select(col("node"), col("r").as("trust_units")).orderBy(col("node"))
   }
 
-  /** Per-round score/label/frontier tables are bounded by the node count,
-    * while the edge relation they join is the data-scale side — but both
-    * sit behind localCheckpoints with no size statistics, so the planner
-    * sort-merge-joins and re-shuffles the edges EVERY round. When the
-    * checkpointed edge relation is provably small enough that any
-    * node-bounded table is broadcast-safe (nodes ≤ 2·edges), attach the
-    * per-round state by broadcast instead (guide §3.1): the edge relation
-    * is then never shuffled by the iteration. Threshold is conf-driven
-    * (`graft.graph.broadcastStateMax`, edges; 0 disables) so production
-    * sizes it and probes can A/B it; identical results either way — only
-    * the join strategy differs. Costs one count() on checkpointed edges
-    * per operator against 2·rounds saved exchanges. */
-  private def attachFor(e: DataFrame): DataFrame => DataFrame = {
-    val max = e.sparkSession.conf
-      .get("graft.graph.broadcastStateMax", "4000000").toLong
-    if (max > 0 && e.count() <= max) broadcast else identity
-  }
+  // Per-round score/label/frontier tables are bounded by the node count,
+  // while the edge relation they join is the data-scale side. The
+  // iterators materialize them with exactCheckpoint, so Spark's own
+  // autoBroadcastJoinThreshold sees their measured bytes: the state is
+  // broadcast while it fits and the edge relation is then never shuffled
+  // by the iteration (guide §3.1); past the threshold the default join
+  // returns. Identical results either way — only the strategy differs.
 
   /** Undirected expansion + degree relation, both materialized for the
     * iteration loop (each round reads them once per branch). */
   private def undirect(edges: DataFrame): (DataFrame, DataFrame) = {
-    val e = edges.select(col("a"), col("b"))
-      .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint()
-    val deg = e.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+    val e = exactCheckpoint(edges.select(col("a"), col("b"))
+      .unionAll(edges.select(col("b").as("a"), col("a").as("b"))))
+    val deg = exactCheckpoint(
+      e.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg")))
     (e, deg)
   }
 
@@ -440,20 +427,18 @@ object Graph {
   private def iterate(e: DataFrame, deg: DataFrame, init: DataFrame,
       teleportExpr: Column, rounds: Int,
       dampNum: Long, dampDen: Long): DataFrame = {
-    val att = attachFor(e)
     var r = init
     (0 until rounds).foreach { _ =>
       val inflow = e
-        .join(att(r.withColumnRenamed("node", "a")), "a")
-        .join(att(deg.select(col("node").as("a"), col("deg"))), "a")
+        .join(r.withColumnRenamed("node", "a"), "a")
+        .join(deg.select(col("node").as("a"), col("deg")), "a")
         .select(col("b").as("node"), expr("r div deg").as("share"))
         .groupBy(col("node")).agg(sum(col("share")).as("inflow"))
-      r = deg
+      r = exactCheckpoint(deg
         .join(inflow, Seq("node"), "left")
         .select(col("node"),
           (teleportExpr +
-            expr(s"($dampNum * coalesce(inflow, 0L)) div $dampDen")).as("r"))
-        .localCheckpoint()
+            expr(s"($dampNum * coalesce(inflow, 0L)) div $dampDen")).as("r")))
     }
     r
   }
@@ -471,9 +456,8 @@ object Graph {
     */
   def assortativity(edges: DataFrame): DataFrame = {
     val (e, deg) = undirect(edges)
-    val att = attachFor(e)
-    e.join(att(deg.select(col("node").as("a"), col("deg").as("da"))), "a")
-      .join(att(deg.select(col("node").as("b"), col("deg").as("db"))), "b")
+    e.join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
+      .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
       .agg(count(lit(1)).as("m"),
         sum(col("da")).as("s_x"),
         sum(col("da") * col("da")).as("s_xx"),
@@ -510,21 +494,19 @@ object Graph {
     val e = edges.select(col("a"), col("b"))
       .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint()
-    val nodes = e.select(col("a").as("node")).distinct().localCheckpoint()
-    val att = attachFor(e)
+    val nodes = exactCheckpoint(e.select(col("a").as("node")).distinct())
     var l = nodes.select(col("node"), col("node").as("label"))
     (0 until rounds).foreach { _ =>
       val votes = e
-        .join(att(l.withColumnRenamed("node", "a")), "a")
+        .join(l.withColumnRenamed("node", "a"), "a")
         .groupBy(col("b").as("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
       val w = Window.partitionBy(col("node"))
         .orderBy(col("cnt").desc, col("label").asc)
-      l = votes
+      l = exactCheckpoint(votes
         .withColumn("rn", row_number().over(w))
         .where(col("rn") === 1)
-        .select(col("node"), col("label"))
-        .localCheckpoint()
+        .select(col("node"), col("label")))
     }
     l.select(col("node"), col("label").as("community")).orderBy(col("node"))
   }
@@ -555,17 +537,15 @@ object Graph {
     val e = edges.select(col("a"), col("b"))
       .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint()
-    var known = seeds.select(col("node"), lit(0L).as("dist")).localCheckpoint()
-    val att = attachFor(e)
+    var known = exactCheckpoint(seeds.select(col("node"), lit(0L).as("dist")))
     var frontier = known
     (1 to rounds).foreach { r =>
-      val next = e
-        .join(att(frontier.withColumnRenamed("node", "a").drop("dist")), "a")
+      val next = exactCheckpoint(e
+        .join(frontier.withColumnRenamed("node", "a").drop("dist"), "a")
         .select(col("b").as("node")).distinct()
-        .join(att(known), Seq("node"), "left_anti")
-        .select(col("node"), lit(r.toLong).as("dist"))
-        .localCheckpoint()
-      known = known.unionAll(next).localCheckpoint()
+        .join(known, Seq("node"), "left_anti")
+        .select(col("node"), lit(r.toLong).as("dist")))
+      known = exactCheckpoint(known.unionAll(next))
       frontier = next
     }
     known.orderBy(col("node"))
@@ -591,29 +571,26 @@ object Graph {
     */
   def hits(edges: DataFrame, rounds: Int, scale: Long = 1000000L): DataFrame = {
     require(rounds >= 1 && rounds <= 8)
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    var hub = e.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(scale).as("h")).localCheckpoint()
-    // Each round attaches a (node, score) table to e twice; see
-    // [[attachFor]] — broadcast the node-bounded scores so e is never
-    // shuffled by the iteration (r13 AbHitsR13: 2.53 -> 2.18 s, results
+    val e = exactCheckpoint(edges.select(col("src"), col("dst")))
+    var hub = exactCheckpoint(e.select(col("src").as("node")).distinct()
+      .select(col("node"), lit(scale).as("h")))
+    // Each round attaches a (node, score) table to e twice; the exact-size
+    // checkpoints let the node-bounded scores broadcast so e is never
+    // shuffled by the iteration (r13 A/B at sf0.1: 2.53 -> 2.18 s, results
     // row-identical; round-1 plan 4 SortMergeJoin -> 4 BroadcastHashJoin,
     // plans/r13/graph_hits_round_*.txt).
-    val attach = attachFor(e)
     var auth: DataFrame = null
     (0 until rounds).foreach { _ =>
-      val aRaw = e.join(attach(hub.withColumnRenamed("node", "src")), "src")
+      val aRaw = e.join(hub.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a_raw"))
-      auth = aRaw
+      auth = exactCheckpoint(aRaw
         .crossJoin(broadcast(aRaw.agg(max(col("a_raw")).as("a_max"))))
-        .select(col("node"), expr(s"(a_raw * ${scale}L) div a_max").as("a"))
-        .localCheckpoint()
-      val hRaw = e.join(attach(auth.withColumnRenamed("node", "dst")), "dst")
+        .select(col("node"), expr(s"(a_raw * ${scale}L) div a_max").as("a")))
+      val hRaw = e.join(auth.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node")).agg(sum(col("a")).as("h_raw"))
-      hub = hRaw
+      hub = exactCheckpoint(hRaw
         .crossJoin(broadcast(hRaw.agg(max(col("h_raw")).as("h_max"))))
-        .select(col("node"), expr(s"(h_raw * ${scale}L) div h_max").as("h"))
-        .localCheckpoint()
+        .select(col("node"), expr(s"(h_raw * ${scale}L) div h_max").as("h")))
     }
     auth.select(col("node"), lit("authority").as("side"), col("a").as("units"))
       .unionAll(hub.select(col("node"), lit("hub").as("side"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftBridge.exactCheckpoint
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1159,13 +1160,12 @@ object Similarity {
         Seq("seed", "bucket"))
       .where(col("q") =!= col("b"))
       .select(col("q"), col("b")).distinct()
-    // vector-store attach onto the candidate-scale relation: broadcast
-    // the n-row store when provably small (the knnGraphDescent guard)
-    val att: DataFrame => DataFrame =
-      if (vecs.count() <= 500000L) broadcast else identity
+    // vector-store attach onto the candidate-scale relation: Spark's size
+    // rule broadcasts the n-row store while it fits (a parquet scan's file
+    // statistics already drive the planner)
     mutualTopK(cand
-      .join(att(base.select(col(idCol).as("q"), col(vecCol).as("qv"))), Seq("q"))
-      .join(att(base.select(col(idCol).as("b"), col(vecCol).as("bv"))), Seq("b")),
+      .join(base.select(col(idCol).as("q"), col(vecCol).as("qv")), Seq("q"))
+      .join(base.select(col(idCol).as("b"), col(vecCol).as("bv")), Seq("b")),
       k, minCosine, dims)
   }
 
@@ -1209,12 +1209,10 @@ object Similarity {
         Seq("seed", "bucket"))
       .where(col("q") =!= col("b"))
       .select(col("q"), col("b")).distinct()
-    // same vector-store broadcast attach as mutualKnnPairsBucketed
-    val att: DataFrame => DataFrame =
-      if (vecs.count() <= 500000L) broadcast else identity
+    // same vector-store attach as mutualKnnPairsBucketed
     directedTopK(cand
-      .join(att(base.select(col(idCol).as("q"), col(vecCol).as("qv"))), Seq("q"))
-      .join(att(base.select(col(idCol).as("b"), col(vecCol).as("bv"))), Seq("b")),
+      .join(base.select(col(idCol).as("q"), col(vecCol).as("qv")), Seq("q"))
+      .join(base.select(col(idCol).as("b"), col(vecCol).as("bv")), Seq("b")),
       k, minCosine, dims)
   }
 
@@ -1244,25 +1242,22 @@ object Similarity {
     val base = vecs.select(col(idCol), col(vecCol))
     // The candidate relation is n·(2k)² rows per round; the tables it
     // joins — the n-row vector store (score attach) and the 2kn-row
-    // undirected edge list (two-hop closure) — are the provably-smaller
-    // sides, but they sit behind localCheckpoints with no size
-    // statistics, so the planner sort-merge-joined and re-shuffled the
-    // candidates four times per round. Broadcast the small sides instead
-    // (guide §3.1, the r13 hits/nsw playbook): candidates are then never
-    // shuffled for the attach; only the final per-q window moves them
-    // (r13 AbDescentR13: descent rounds 1.36 -> 0.96 s at sf0.1,
-    // results row-identical). Guarded: one count() job against four
-    // saved exchanges per round; past ~500k vectors (store ≈ 130 MB at
-    // dims 64, edge list ≈ 2k·n rows) the default strategy returns.
-    val att: DataFrame => DataFrame =
-      if (vecs.count() <= 500000L) broadcast else identity
-    var g = graph0.select(col("q"), col("b"), col("s")).localCheckpoint()
+    // undirected edge list (two-hop closure) — are the smaller sides.
+    // A stock localCheckpoint carries no size statistics for the edge
+    // list, so the planner would sort-merge-join and re-shuffle the
+    // candidates four times per round. Exact-size checkpoints let Spark's
+    // own size rule broadcast the small sides instead (guide §3.1):
+    // candidates are then never shuffled for the attach; only the final
+    // per-q window moves them (r13 A/B at sf0.1: descent rounds 1.36 ->
+    // 0.96 s, results row-identical). Sides past the threshold — a large
+    // store, or a large k·n edge list — keep the default join.
+    var g = exactCheckpoint(graph0.select(col("q"), col("b"), col("s")))
     for (_ <- 1 to rounds) {
       val edges = g.select(col("q"), col("b"))
       val nbr = edges.unionAll(
         edges.select(col("b").as("q"), col("q").as("b")))
       val twoHop = nbr.select(col("q"), col("b").as("m"))
-        .join(att(nbr.select(col("q").as("m"), col("b"))), Seq("m"))
+        .join(nbr.select(col("q").as("m"), col("b")), Seq("m"))
         .select(col("q"), col("b"))
       // candidates = UNDIRECTED 1-hop ∪ 2-hop: proposing the reverse
       // direct edge matters — without it a vector whose nearest neighbor
@@ -1270,10 +1265,10 @@ object Similarity {
       // next re-rank instead of adopting it
       val cand = nbr.unionAll(twoHop)
         .where(col("q") =!= col("b")).distinct()
-      g = directedTopK(cand
-        .join(att(base.select(col(idCol).as("q"), col(vecCol).as("qv"))), Seq("q"))
-        .join(att(base.select(col(idCol).as("b"), col(vecCol).as("bv"))), Seq("b")),
-        k, minCosine, dims).localCheckpoint()
+      g = exactCheckpoint(directedTopK(cand
+        .join(base.select(col(idCol).as("q"), col(vecCol).as("qv")), Seq("q"))
+        .join(base.select(col(idCol).as("b"), col(vecCol).as("bv")), Seq("b")),
+        k, minCosine, dims))
     }
     g
   }

@@ -36,6 +36,27 @@ class ComponentsAndSkewSpec extends SparkSpec {
     }
   }
 
+  test("connectedComponents: driverMaxEdges at the exact directed edge count is the union-find boundary") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.LogicalRDD
+    val nodes = (1L to 7L).toDF("id")
+    // (2,1) repeats (1,2) reversed: 6 distinct directed edges, not 8
+    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (2L, 1L)).toDF("a", "b")
+    def run(maxEdges: Long) =
+      Components.connectedComponents(nodes, pairs, driverMaxEdges = maxEdges)
+    // only the iterative path returns labels read from a checkpoint
+    def iterative(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r }.isDefined
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (atCount, below) = (run(6L), run(5L))
+    assert(!iterative(atCount))
+    assert(iterative(below))
+    assert(labels(atCount) == labels(below))
+    assert(labels(atCount) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
+      5L -> 4L, 6L -> 6L, 7L -> 7L))
+  }
+
   test("salted join returns identical results to a plain join") {
     import spark.implicits._
     val left = Seq((1, "a1"), (1, "a2"), (1, "a3"), (2, "b1"), (3, "c1"))
